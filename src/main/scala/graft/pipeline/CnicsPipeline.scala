@@ -289,15 +289,26 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
       keyScope = Some(ks.select(col("site_pat_id").as("key"))))
   }
 
-  /** Zero-filled audit accumulation shared by run/runForKeys/
-    * runIncremental (insert/update/delete always present; the E5
-    * error channel only when duplicates were routed out). */
-  private def addCounts(audit: Map[(String, String), Long], rt: String,
-      counts: Map[String, Long]): Map[(String, String), Long] = {
-    val base = Seq("insert", "update", "delete").foldLeft(audit) { (m, a) =>
-      m + ((rt, a) -> counts.getOrElse(a, 0L))
-    }
-    counts.get("error").fold(base)(n => base + ((rt, "error") -> n))
+  /** The requested resource types, in [[CnicsPipeline.ResourceTypes]]
+    * order (Patient first). */
+  private def requested(resourceList: Set[String]): Seq[String] =
+    CnicsPipeline.ResourceTypes.collect { case (name, rt) if resourceList(name) => rt }
+
+  /** The audit fold every multi-type entry point shares: per-type
+    * counts to the 12-counter map (insert/update/delete always present;
+    * the E5 error channel only when duplicates were routed out). */
+  private def auditOf(counts: Seq[(String, Map[String, Long])]): Map[(String, String), Long] =
+    counts.flatMap { case (rt, c) =>
+      Seq("insert", "update", "delete").map(a => (rt, a) -> c.getOrElse(a, 0L)) ++
+        c.get("error").map(n => (rt, "error") -> n)
+    }.toMap
+
+  /** One type's full (non-incremental) reconcile. */
+  private def fullPass(resourceType: String, limit: Int): Map[String, Long] = resourceType match {
+    case "Patient" => runPatients(limit)
+    case "Condition" => runConditions(limit)
+    case "MedicationRequest" => runMedications(limit)
+    case "Observation" => runObservations(limit)
   }
 
   /** The full targeted job for a dirty-key set — every resource type,
@@ -310,24 +321,12 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     * row → no subject) — they are removed by the Patient DELETE's
     * `?_cascade=delete` (reference parity, cnics_to_fhir.py:333). */
   def runForKeys(keys: DataFrame,
-      resourceList: Set[String] =
-        Set("patients", "conditions", "medicationrequests", "observations"))
-      : Map[(String, String), Long] = {
-    val ks = dirtyKeys(keys)
-    val scoped = scopedTo(ks)
-    var audit = Map[(String, String), Long]()
-    def add(rt: String, counts: Map[String, Long]): Unit = {
-      audit = addCounts(audit, rt, counts)
-    }
-    if (resourceList("patients"))
-      add("Patient", scoped.reconcile("Patient", scoped.patientResources(),
-        identifierSystem = Some(sitePatientIdSystem),
-        keyScope = Some(ks.select(col("site_pat_id").as("key")))))
-    if (resourceList("conditions")) add("Condition", scoped.runConditions())
-    if (resourceList("medicationrequests"))
-      add("MedicationRequest", scoped.runMedications())
-    if (resourceList("observations")) add("Observation", scoped.runObservations())
-    audit
+      resourceList: Set[String] = CnicsPipeline.AllResources): Map[(String, String), Long] = {
+    val scoped = scopedTo(dirtyKeys(keys))
+    auditOf(requested(resourceList).map {
+      case "Patient" => "Patient" -> runPatientsForKeys(keys)
+      case rt => rt -> scoped.fullPass(rt, Int.MaxValue)
+    })
   }
 
   private def dirtyKeys(keys: DataFrame): DataFrame =
@@ -373,9 +372,11 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     * the previous manifest and the next run re-finds the same dirty
     * keys; PUT-with-id upserts and DELETEs replay idempotently. */
   def runPatientsIncremental(manifestDir: String,
-      limit: Int = Int.MaxValue): Map[String, Long] =
-    incrementalPass("Patient", patientResources(limit),
+      limit: Int = Int.MaxValue): Map[String, Long] = {
+    val plan = planIncremental("Patient", patientResources(limit),
       Some(sitePatientIdSystem), manifestDir)
+    try applyIncremental(plan)._2 finally plan.release()
+  }
 
   /** The full incremental job: every resource type through its own
     * (key, hash) manifest under `manifestDir/<Type>`. The child
@@ -389,90 +390,134 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
     * explicitly, which converges to the same end state as the Patient
     * cascade (the two paths are idempotent against each other).
     *
+    * Order: each type is planned ([[planIncremental]]: assembly,
+    * manifest read, diff, dirty set) and then applied
+    * ([[applyIncremental]]: key-scoped reconcile, manifest swing).
+    *  1. The plans of every requested type run concurrently. They read
+    *     only the source tables and the type's own manifest, never the
+    *     store, so they cannot observe each other.
+    *  2. The Patient apply runs alone. Its `?_cascade=delete` must
+    *     reach the store before a child's key-targeted snapshot reads
+    *     it, or cascaded children would be classified (and counted) as
+    *     explicit child deletes; and a new patient must exist before
+    *     its children are PUT, because strict-reference stores reject a
+    *     child whose subject is missing.
+    *  3. The child applies run concurrently: each touches only its own
+    *     type in the store and its own manifest.
+    * Concurrent phases run on threads created for this call (see
+    * [[CnicsPipeline.inParallel]]); the call returns only after every
+    * task has ended. A failed plan or Patient apply stops the run
+    * before any later apply; a failed child apply lets the other child
+    * applies finish. Either way the first failure, in type order, is
+    * rethrown.
+    *
+    * Crash contract (unchanged by the overlap): a type's manifest
+    * swings only after its own apply returns, so a type whose apply
+    * failed or never ran keeps its previous manifest and the next run
+    * re-finds its dirty keys.
+    *
     * Blind spot by design: clean keys are never read, so store-side
     * corruption of an UNCHANGED key (another writer, a restored
     * backup) stays invisible until that key next changes. Run the
     * full job periodically as an integrity sweep — the incremental
     * mode replaces the nightly re-PUT, not the audit. */
   def runIncremental(manifestDir: String,
-      resourceList: Set[String] =
-        Set("patients", "conditions", "medicationrequests", "observations"),
+      resourceList: Set[String] = CnicsPipeline.AllResources,
       limit: Int = Int.MaxValue): Map[(String, String), Long] = {
-    var audit = Map[(String, String), Long]()
-    def add(rt: String, counts: Map[String, Long]): Unit = {
-      audit = addCounts(audit, rt, counts)
-    }
-    lazy val ids = cohortIds(limit)
-    def childSystem(kind: String) =
-      s"https://cnics.cirg.washington.edu/$kind/site-record-id/$siteLower"
-    if (resourceList("patients"))
-      add("Patient", incrementalPass("Patient", patientResources(limit),
-        Some(sitePatientIdSystem), s"$manifestDir/Patient"))
-    if (resourceList("conditions"))
-      add("Condition", incrementalPass("Condition", conditionResources(ids),
-        Some(childSystem("diagnosis")), s"$manifestDir/Condition"))
-    if (resourceList("medicationrequests"))
-      add("MedicationRequest", incrementalPass("MedicationRequest",
-        medicationResources(ids), Some(childSystem("medication")),
-        s"$manifestDir/MedicationRequest"))
-    if (resourceList("observations"))
-      add("Observation", incrementalPass("Observation",
-        observationResources(ids), Some(childSystem("lab")),
-        s"$manifestDir/Observation"))
-    audit
+    // sources are built on the caller's thread, which also forces the
+    // shared cohortIds cut here, once: TrieMap.getOrElseUpdate may
+    // evaluate its body twice when threads race on a missing key
+    val sources = requested(resourceList).map(rt => rt -> incrementalSource(rt, limit))
+    val plans = CnicsPipeline.inParallel(sources.map { case (rt, (cur, system)) =>
+      () => planIncremental(rt, cur, Some(system), s"$manifestDir/$rt")
+    })
+    try {
+      val (parent, children) = plans.map(_.get).partition(_.resourceType == "Patient")
+      auditOf(parent.map(applyIncremental) ++
+        CnicsPipeline.inParallel(children.map(p => () => applyIncremental(p))).map(_.get))
+    } finally plans.foreach(_.foreach(_.release()))
   }
 
-  /** One manifest-diffed reconcile: diff `cur` against the previous
-    * manifest, key-scope the merge and the store read to the dirty
-    * set, and swing the manifest (tmp write + bak swap) only after the
-    * store apply succeeds — a crash mid-apply leaves the previous
-    * manifest and the next run re-finds the same dirty keys
-    * (PUT/DELETE replay idempotently). */
-  private def incrementalPass(resourceType: String, cur0: DataFrame,
-      identifierSystem: Option[String], manifestDir: String): Map[String, Long] = {
+  /** The assembled frame one incremental pass diffs, and the
+    * identifier system its key-targeted store read is qualified by. */
+  private def incrementalSource(resourceType: String, limit: Int): (DataFrame, String) = {
+    def childSystem(kind: String) =
+      s"https://cnics.cirg.washington.edu/$kind/site-record-id/$siteLower"
+    resourceType match {
+      case "Patient" => (patientResources(limit), sitePatientIdSystem)
+      case "Condition" => (conditionResources(cohortIds(limit)), childSystem("diagnosis"))
+      case "MedicationRequest" =>
+        (medicationResources(cohortIds(limit)), childSystem("medication"))
+      case "Observation" => (observationResources(cohortIds(limit)), childSystem("lab"))
+    }
+  }
+
+  /** Plan half of a manifest-diffed pass: persist the assembled `cur`,
+    * heal and read the type's previous manifest, diff, and persist and
+    * materialize the dirty-key set (the key-targeted snapshot and the
+    * classify's source semi-join both read it, so it is computed once).
+    * Reads the source and the manifest only, never the store. */
+  private def planIncremental(resourceType: String, cur0: DataFrame,
+      identifierSystem: Option[String], manifestDir: String): CnicsPipeline.IncrementalPlan = {
+    val (fsys, live, bak) = manifestPaths(manifestDir)
+    // heal a swap crashed between its two renames (live gone, bak
+    // holds the previous manifest): restore bak rather than letting
+    // an empty prev force a full re-sync
+    if (!fsys.exists(live) && fsys.exists(bak)) {
+      fsys.rename(bak, live); ()
+    }
+    val prev =
+      if (fsys.exists(live)) spark.read.parquet(live.toString)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("key",
+            org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("__h",
+            org.apache.spark.sql.types.LongType))))
     val cur = cur0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val live = s"$manifestDir/manifest"
-      val fsys = new org.apache.hadoop.fs.Path(live)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // heal a swap crashed between its two renames (live gone, bak
-      // holds the previous manifest): restore bak rather than letting
-      // an empty prev force a full re-sync
-      val bak = new org.apache.hadoop.fs.Path(s"$manifestDir/.manifest.bak")
-      val livePath = new org.apache.hadoop.fs.Path(live)
-      if (!fsys.exists(livePath) && fsys.exists(bak)) {
-        fsys.rename(bak, livePath); ()
-      }
-      val prev =
-        if (fsys.exists(livePath)) spark.read.parquet(live)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("key",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("__h",
-              org.apache.spark.sql.types.LongType))))
-      val (dirty, manifest0) = Merge.manifestDiff(cur, "key", "json", prev)
-      val (counts, dupKeys) = reconcileDetail(resourceType, cur,
-        identifierSystem = identifierSystem, keyScope = Some(dirty))
-      // E5 dup keys were routed OUT of the merge unapplied: advancing
-      // their manifest hash would mask the error forever (the key would
-      // read clean next run while the store keeps the duplicate data).
-      // Keep them out of the manifest so they stay dirty and the error
-      // re-surfaces every run until fixed — same steady-state behavior
-      // as the full PUT-always run.
-      val manifest = if (dupKeys.isEmpty) manifest0
-        else manifest0.filter(!col("key").isin(dupKeys: _*))
-      // apply succeeded -> swing the manifest (write fully, then swap)
-      val tmp = new org.apache.hadoop.fs.Path(s"$manifestDir/.manifest.tmp")
-      manifest.write.mode("overwrite").parquet(tmp.toString)
-      if (fsys.exists(livePath) && !fsys.rename(livePath, bak))
-        throw new IllegalStateException(s"manifest bak rename failed: $live")
-      if (!fsys.rename(tmp, livePath))
-        throw new IllegalStateException(s"manifest swap failed: $live")
-      fsys.delete(bak, true)
-      counts
-    } finally { cur.unpersist(); () }
+    val (dirty, manifest) = Merge.manifestDiff(cur, "key", "json", prev)
+    val plan = CnicsPipeline.IncrementalPlan(resourceType, cur,
+      dirty.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      manifest, identifierSystem, manifestDir)
+    try { plan.dirty.count(); plan }
+    catch { case e: Throwable => plan.release(); throw e }
+  }
+
+  /** Apply half: reconcile with both sides key-scoped to the plan's
+    * dirty set, then swing the manifest (tmp write + bak swap) — only
+    * after the store apply succeeded, so a crash mid-apply leaves the
+    * previous manifest and the next run re-finds the same dirty keys
+    * (PUT/DELETE replay idempotently). The caller releases the plan. */
+  private def applyIncremental(p: CnicsPipeline.IncrementalPlan): (String, Map[String, Long]) = {
+    val (counts, dupKeys) = reconcileDetail(p.resourceType, p.cur,
+      identifierSystem = p.identifierSystem, keyScope = Some(p.dirty))
+    // E5 dup keys were routed OUT of the merge unapplied: advancing
+    // their manifest hash would mask the error forever (the key would
+    // read clean next run while the store keeps the duplicate data).
+    // Keep them out of the manifest so they stay dirty and the error
+    // re-surfaces every run until fixed — same steady-state behavior
+    // as the full PUT-always run.
+    val manifest = if (dupKeys.isEmpty) p.manifest
+      else p.manifest.filter(!col("key").isin(dupKeys: _*))
+    // apply succeeded -> swing the manifest (write fully, then swap)
+    val (fsys, live, bak) = manifestPaths(p.manifestDir)
+    val tmp = new org.apache.hadoop.fs.Path(s"${p.manifestDir}/.manifest.tmp")
+    manifest.write.mode("overwrite").parquet(tmp.toString)
+    if (fsys.exists(live) && !fsys.rename(live, bak))
+      throw new IllegalStateException(s"manifest bak rename failed: $live")
+    if (!fsys.rename(tmp, live))
+      throw new IllegalStateException(s"manifest swap failed: $live")
+    fsys.delete(bak, true)
+    p.resourceType -> counts
+  }
+
+  /** A manifest directory's file system, live manifest and swap backup. */
+  private def manifestPaths(manifestDir: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = {
+    val live = new org.apache.hadoop.fs.Path(s"$manifestDir/manifest")
+    (live.getFileSystem(spark.sparkContext.hadoopConfiguration), live,
+      new org.apache.hadoop.fs.Path(s"$manifestDir/.manifest.bak"))
   }
 
   private def conditionResources(ids: DataFrame): DataFrame =
@@ -549,18 +594,9 @@ class CnicsPipeline(spark: SparkSession, in: CnicsInputs, store: FhirStore, site
   /** Full job for one site: returns the reference's 12-counter audit
     * (E1: {Patient, Condition, MedicationRequest, Observation} ×
     * {inserted, updated, deleted}). */
-  def run(resourceList: Set[String] = Set("patients", "conditions", "medicationrequests", "observations"),
-      limit: Int = Int.MaxValue): Map[(String, String), Long] = {
-    var audit = Map[(String, String), Long]()
-    def add(rt: String, counts: Map[String, Long]): Unit = {
-      audit = addCounts(audit, rt, counts)
-    }
-    if (resourceList("patients")) add("Patient", runPatients(limit))
-    if (resourceList("conditions")) add("Condition", runConditions(limit))
-    if (resourceList("medicationrequests")) add("MedicationRequest", runMedications(limit))
-    if (resourceList("observations")) add("Observation", runObservations(limit))
-    audit
-  }
+  def run(resourceList: Set[String] = CnicsPipeline.AllResources,
+      limit: Int = Int.MaxValue): Map[(String, String), Long] =
+    auditOf(requested(resourceList).map(rt => rt -> fullPass(rt, limit)))
 
   /** SINGLE-STAGE transactional job (r15 verdict #7 — SURVEY §3.2's
     * flagged option, opt-in beside [[run]]): the four reconciles run
@@ -619,6 +655,46 @@ object CnicsPipeline {
   /** E5 dup-key error-channel bound: above this the duplicate set is
     * store corruption, not an error channel (see reconcileDetail). */
   val MaxDupKeys: Int = 10000
+
+  /** `resourceList` names and the resource types they select, in apply
+    * order: Patient first, because children reference it. */
+  val ResourceTypes: Seq[(String, String)] = Seq("patients" -> "Patient",
+    "conditions" -> "Condition", "medicationrequests" -> "MedicationRequest",
+    "observations" -> "Observation")
+
+  val AllResources: Set[String] = ResourceTypes.map(_._1).toSet
+
+  /** A planned incremental pass (see [[CnicsPipeline.runIncremental]]):
+    * the persisted assembly, its persisted dirty-key set and the
+    * manifest to swing in once the apply has returned. */
+  private final case class IncrementalPlan(resourceType: String, cur: DataFrame,
+      dirty: DataFrame, manifest: DataFrame, identifierSystem: Option[String],
+      manifestDir: String) {
+    def release(): Unit = { dirty.unpersist(); cur.unpersist(); () }
+  }
+
+  /** Name prefix of the threads [[inParallel]] creates. */
+  val SyncThreadPrefix = "cnics-sync-"
+
+  /** Runs `tasks` concurrently, one thread each, and returns every
+    * outcome in task order once all of them have ended; a single task
+    * runs on the caller. The threads are created for this call on the
+    * caller's thread, so Spark's inheritable local properties (job
+    * group, SQL execution id) start out as the caller's — a shared
+    * pool's threads would carry whatever was set when they were made.
+    * Every thread is joined before this returns. */
+  private def inParallel[A](tasks: Seq[() => A]): Seq[scala.util.Try[A]] =
+    if (tasks.size <= 1) tasks.map(t => scala.util.Try(t()))
+    else {
+      val out = Array.fill[scala.util.Try[A]](tasks.size)(
+        scala.util.Failure(new IllegalStateException("sync task died")))
+      val threads = tasks.zipWithIndex.map { case (t, i) =>
+        new Thread(() => out(i) = scala.util.Try(t()), SyncThreadPrefix + i)
+      }
+      try threads.foreach(_.start())
+      finally threads.foreach(t => if (t.getState != Thread.State.NEW) t.join())
+      out.toSeq
+    }
 
   /** A6 — the per-field last-wins crosswalk merge on SitePatientId
     * (cnics_to_fhir.py:296-304): hmrn is overwritten by every

